@@ -16,6 +16,10 @@ Key semantics preserved:
   task to avoid duplicate pages (``pager-workflow.py:320``); we instead make
   the write itself idempotent (anti-join on open incident keys before
   append), so retries are safe;
+- the sink is read with its static ``ALERT_SCHEMA`` (no schema-inference
+  job) and every append writes one file of driver-built rows, whose naive
+  UTC ``event_ts`` is stored as UTC whatever the host time zone
+  (``catalog.local_frame``);
 - ``trigger`` → ``resolve`` event pairs mirror the PR-merge / issue-close
   resolve hooks.
 """
@@ -25,10 +29,12 @@ from __future__ import annotations
 from datetime import datetime, timezone
 from typing import Iterable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .catalog import local_frame
 from .checks.definitions import CheckResult
 
 ALERT_SCHEMA = T.StructType(
@@ -65,11 +71,16 @@ class AlertSink:
         # cheap local-path check first (avoids a logged AnalysisException on
         # the first write); the try/except stays for non-local filesystems
         if "://" not in self.path and not os.path.exists(self.path):
-            return self.spark.createDataFrame([], ALERT_SCHEMA)
+            return local_frame(self.spark, [], ALERT_SCHEMA)
         try:
-            return self.spark.read.parquet(self.path)
-        except Exception:
-            return self.spark.createDataFrame([], ALERT_SCHEMA)
+            return self.spark.read.schema(ALERT_SCHEMA).parquet(self.path)
+        except AnalysisException:
+            return local_frame(self.spark, [], ALERT_SCHEMA)
+
+    def _append(self, rows: list[tuple]) -> None:
+        local_frame(self.spark, rows, ALERT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(self.path)
 
     def open_incidents(self) -> DataFrame:
         """Incidents with a trigger not followed by a resolve."""
@@ -116,12 +127,12 @@ class AlertSink:
         ]
         if not rows:
             return 0
-        new = self.spark.createDataFrame(rows, ALERT_SCHEMA)
-        deduped = new.join(self.open_incidents(), on="incident_key", how="left_anti")
-        n = deduped.count()
-        if n:
-            deduped.write.mode("append").parquet(self.path)
-        return n
+        # the anti-join on open incident keys, evaluated once on the driver
+        open_keys = {r.incident_key for r in self.open_incidents().collect()}
+        rows = [row for row in rows if row[0] not in open_keys]
+        if rows:
+            self._append(rows)
+        return len(rows)
 
     def resolve(self, check_name: str, channel: str = "pagerduty") -> int:
         """Resolve an open incident (PR-merge / issue-close hook analogue)."""
@@ -130,8 +141,5 @@ class AlertSink:
         if not is_open:
             return 0
         now = datetime.now(timezone.utc).replace(tzinfo=None)
-        row = [(key, "resolve", channel, self.service, check_name, None, None, now)]
-        self.spark.createDataFrame(row, ALERT_SCHEMA).write.mode("append").parquet(
-            self.path
-        )
+        self._append([(key, "resolve", channel, self.service, check_name, None, None, now)])
         return 1

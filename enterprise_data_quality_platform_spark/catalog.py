@@ -5,9 +5,40 @@ Replaces the reference's BigQuery datasets (``raw_adventureworks`` /
 ``/root/reference/airflow/dags/pager-workflow.py:126,159,189``) with
 DataFrames over parquet. Schemas live in the parquet footers; explicit
 StructTypes below document the contract (FIXTURES.md) and back schema checks.
+
+Read path. Every schema-inferring parquet read in the package goes through
+``read_parquet``. Inferring a parquet schema always runs a Spark job (one
+task even for one file), and on small inputs that job costs more than the
+read it precedes. ``read_parquet`` memoises the inferred schema per session
+and path, stamped with
+
+- the session confs that change what inference returns
+  (``SCHEMA_CONFS``: nanos/binary/int96/NTZ typing, schema merging,
+  partition-column typing, case sensitivity), plus any reader options;
+- the file listing under the path: every file's path, size and mtime.
+
+When the stamp matches, the read is ``spark.read.schema(<memoised>)``,
+which runs no job. Any difference (a file rewritten, added or removed, a
+conf flipped) is a miss, and a miss is exactly the plain inferring read.
+The memo only replays a schema Spark itself inferred from the same files
+under the same confs, so a hit answers as the plain read would, as long as
+a rewrite changes a file's size or mtime (a copy that preserves both, e.g.
+``touch -r``, is not seen). Paths the driver cannot list cheaply (remote
+schemes, globs) always take the plain read.
+
+Driver frames. Small frames the driver builds from Python rows (check
+results, alert rows, audit tables) go through ``local_frame``, which hands
+Spark an Arrow table. That plans as a ``LocalTableScan``; a Python list
+plans as ``Scan ExistingRDD``, which needs a Python worker on every action.
 """
 
 from __future__ import annotations
+
+import os
+import stat
+import threading
+import weakref
+from typing import Any, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -144,11 +175,97 @@ def _fix_events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+#: Session confs that change the schema or partition columns a parquet read
+#: infers; part of the ``read_parquet`` memo stamp.
+SCHEMA_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+    "spark.sql.files.ignoreCorruptFiles",
+    "spark.sql.sources.partitionColumnTypeInference.enabled",
+    "spark.sql.caseSensitive",
+    "spark.sql.timestampType",
+)
+
+# session -> {(path, options): (stamp, schema)}; one entry per path, so a
+# changed listing replaces its entry instead of adding one
+_schema_memo: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_schema_memo_lock = threading.Lock()
+
+
+def _file_listing(path: str) -> tuple | None:
+    """(path, size, mtime_ns) of every file at or under a local ``path``,
+    sorted. ``None`` when the path cannot be listed here (remote scheme,
+    glob, missing, or a file vanished mid-walk)."""
+    if ":" in path.split("/", 1)[0] or any(c in path for c in "*?[{"):
+        return None
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return ((path, st.st_size, st.st_mtime_ns),)
+        out = []
+        for root, _, names in os.walk(path):
+            for name in names:
+                f = os.path.join(root, name)
+                fst = os.stat(f)
+                out.append((f, fst.st_size, fst.st_mtime_ns))
+    except OSError:
+        return None
+    return tuple(sorted(out))
+
+
+def read_parquet(spark: SparkSession, path: str, **options: Any) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)`` with the inferred
+    schema memoised (see the module docstring): a repeated read of an
+    unchanged path under the same confs runs no schema job."""
+    reader = spark.read.options(**options)
+    listing = _file_listing(path)
+    if listing is None:
+        return reader.parquet(path)
+    key = (path, tuple(sorted(options.items())))
+    stamp = (tuple(spark.conf.get(k) for k in SCHEMA_CONFS), listing)
+    with _schema_memo_lock:
+        memo = _schema_memo.setdefault(spark, {})
+        hit = memo.get(key)
+    if hit is not None and hit[0] == stamp:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    schema = df.schema
+    with _schema_memo_lock:
+        memo[key] = (stamp, schema)
+    return df
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple], schema: T.StructType | str
+) -> DataFrame:
+    """Driver-side rows as a ``LocalRelation`` built from an Arrow table.
+
+    ``rows`` are tuples in ``schema`` order (a StructType or a DDL string).
+    Naive datetimes are UTC, the engine's convention for timestamps it
+    stamps itself (``datetime.now(timezone.utc)`` without tzinfo); the host
+    time zone never enters."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T._parse_datatype_string(schema)
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    arrow = pa.Table.from_arrays(
+        [pa.array(c, type=to_arrow_type(f.dataType)) for c, f in zip(cols, schema.fields)],
+        names=schema.names,
+    )
+    return spark.createDataFrame(arrow, schema)
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table. Timestamp parity: UTC session TZ is (re)applied so
     LTZ interpretation can't drift from the oracle."""
     configure_session(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    df = read_parquet(spark, table_path(sf_dir, name))
     if name == "events":
         df = _fix_events_ts(df)
     return df
@@ -159,12 +276,8 @@ def load_tables(
 ) -> dict[str, DataFrame]:
     """Read all tables and register them as temp views so both the DataFrame
     API and ``spark.sql`` can address them."""
-    configure_session(spark)
     out: dict[str, DataFrame] = {}
     for name in names:
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if name == "events":
-            df = _fix_events_ts(df)
-        df.createOrReplaceTempView(name)
-        out[name] = df
+        out[name] = table(spark, sf_dir, name)
+        out[name].createOrReplaceTempView(name)
     return out

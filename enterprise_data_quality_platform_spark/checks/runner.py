@@ -34,6 +34,8 @@ from typing import Iterable, Mapping, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import local_frame
+
 from .compiler import (
     SAMPLE_CAP,
     SAMPLEABLE_TYPES,
@@ -279,7 +281,7 @@ def suite_report_df(spark: SparkSession, results: Iterable[CheckResult]) -> Data
         )
         for r in results
     ]
-    return spark.createDataFrame(rows, REPORT_SCHEMA)
+    return local_frame(spark, rows, REPORT_SCHEMA)
 
 
 def summarize(results: Sequence[CheckResult]) -> dict:

@@ -316,7 +316,9 @@ def render_history_docs_html(
 
     from pyspark.sql import functions as F
 
-    report = spark.read.parquet(store_path)
+    from ..catalog import read_parquet
+
+    report = read_parquet(spark, store_path)
     rows = (
         report.select(
             "check_name",

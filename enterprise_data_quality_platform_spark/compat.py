@@ -17,6 +17,7 @@ from typing import Any, Iterable, Mapping
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .catalog import local_frame
 from .checks import Check, run_suite
 from .checks.definitions import CheckResult
 
@@ -44,16 +45,16 @@ class DataValidationPipeline:
         if isinstance(data, DataFrame):
             return data
         # row-dicts (the reference's shape); missing keys become NULLs,
-        # which is exactly how the schema-compliance check treats absence
-        from pyspark.sql import Row
-
+        # which is exactly how the schema-compliance check treats absence;
+        # column types are Spark's own inference over the values
         cols: list[str] = []
         for rec in data:
             for k in rec:
                 if k not in cols:
                     cols.append(k)
-        rows = [Row(**{c: rec.get(c) for c in cols}) for rec in data]
-        return self.spark.createDataFrame(rows)
+        rows = [tuple(rec.get(c) for c in cols) for rec in data]
+        schema = self.spark._inferSchemaFromList(rows, names=cols)
+        return local_frame(self.spark, rows, schema)
 
     @staticmethod
     def _to_dict(result: CheckResult) -> dict[str, Any]:

@@ -75,9 +75,11 @@ def write_dedup_state(state: dict[str, DataFrame], path: str) -> None:
 
 
 def read_dedup_state(spark: SparkSession, path: str) -> dict[str, DataFrame]:
+    from ..catalog import read_parquet
+
     return {
-        "fingerprints": spark.read.parquet(f"{path}/fingerprints"),
-        "signatures": spark.read.parquet(f"{path}/signatures"),
+        "fingerprints": read_parquet(spark, f"{path}/fingerprints"),
+        "signatures": read_parquet(spark, f"{path}/signatures"),
     }
 
 

@@ -35,6 +35,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..catalog import local_frame
+
 #: default histogram width: ~n/4096 rows land in the candidate bucket
 #: (≈3.7k at sf10 — and the 4096-row histogram collect is trivial). At
 #: 15B-row scale the candidate exceeds MAX_CANDIDATE_ROWS and one
@@ -265,7 +267,8 @@ def exact_group_quantiles(
             for g in needed
         ]
         stats_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 stats_rows,
                 StructType(
                     [
@@ -304,7 +307,8 @@ def exact_group_quantiles(
                     break
         cand_rows = [(g, bid) for g, bs in cand.items() for bid in bs]
         cand_df = F.broadcast(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 cand_rows,
                 StructType(
                     [StructField("__gc", gtype), StructField("__bc", LongType())]

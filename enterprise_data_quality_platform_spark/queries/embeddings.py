@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..functions import vectors as V
 from .registry import register
 
@@ -528,7 +528,8 @@ def embed_pca_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for i in range(len(model["explained_variance"]))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "component int, explained_variance double, explained_ratio double,"
         " n_vectors int, mean_abs_c1 double",

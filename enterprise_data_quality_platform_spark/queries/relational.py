@@ -6,7 +6,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import table
+from ..catalog import local_frame, table
 from ..models import marts, staging
 from ..operators.packedmap import (
     join_packed_codes,
@@ -2720,7 +2720,8 @@ def mart_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         (r["p_brand"], r["p_size"])
         for r in part.select("p_brand", "p_size").distinct().collect()
     )
-    dim = spark.createDataFrame(
+    dim = local_frame(
+        spark,
         [(b, s, i) for i, (b, s) in enumerate(dim_rows)],
         "p_brand string, p_size int, gid long",
     )

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from .knn import _topk_per_probe
+from ..catalog import local_frame, read_parquet
 from ..functions.vectors import cosine_batch, to_double
 
 
@@ -166,7 +167,8 @@ def write_ivf_index(
         corpus, num_centroids, sample_size, iters, seed, vec_col
     )
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
+    cent_df = local_frame(
+        spark,
         [(i, c.tolist()) for i, c in enumerate(centroids)],
         "centroid_id int, centroid array<double>",
     )
@@ -186,7 +188,7 @@ def write_ivf_index(
 
 def read_ivf_centroids(spark, path: str) -> np.ndarray:
     rows = (
-        spark.read.parquet(f"{path}/centroids")
+        read_parquet(spark, f"{path}/centroids")
         .orderBy("centroid_id")
         .collect()
     )
@@ -222,7 +224,7 @@ def ivf_index_topk(
     probed = sorted(
         r["centroid_id"] for r in p.select("centroid_id").distinct().collect()
     )
-    corpus = spark.read.parquet(f"{path}/assignments").filter(
+    corpus = read_parquet(spark, f"{path}/assignments").filter(
         F.col("centroid_id").isin(probed)
     )
     sims = corpus.join(F.broadcast(p), on="centroid_id").select(

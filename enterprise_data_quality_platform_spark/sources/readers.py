@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from .. import catalog
 from ..session import configure_session
 
 CORRUPT_COL = "_corrupt_record"
@@ -57,7 +58,7 @@ def read_parquet(
     spark: SparkSession, path: str, expected: T.StructType | None = None
 ) -> DataFrame:
     configure_session(spark)
-    df = spark.read.parquet(path)
+    df = catalog.read_parquet(spark, path)
     return enforce_schema(df, expected) if expected is not None else df
 
 
@@ -165,7 +166,7 @@ def read_parquet_evolving(
     # generation directory is fine — only cross-generation type conflicts
     # need the separate reads
     frames = [
-        conform(spark.read.option("mergeSchema", "true").parquet(p))
+        conform(catalog.read_parquet(spark, p, mergeSchema="true"))
         for p in paths
     ]
     return reduce(lambda a, b: a.unionByName(b), frames)

@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
+
 
 def write_partitioned(
     df: DataFrame,
@@ -39,7 +41,7 @@ def materialize_model(
         df = df.withColumn("p_date", F.to_date(F.col(date_col)))
         cols = ["p_date"]
     write_partitioned(df, path, cols, mode)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def materialize_incremental(
@@ -62,7 +64,7 @@ def materialize_incremental(
         out.write.mode("overwrite").partitionBy("p_date").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
@@ -153,11 +155,11 @@ def merge_upsert(
         if date_col is not None:
             w = w.partitionBy("p_date")
         w.parquet(path)
-        return spark.read.parquet(path)
+        return read_parquet(spark, path)
 
     if date_col is not None:
         touched = [r.p_date for r in updates.select("p_date").distinct().collect()]
-        target = spark.read.parquet(path).filter(F.col("p_date").isin(touched))
+        target = read_parquet(spark, path).filter(F.col("p_date").isin(touched))
         # no broadcast hint: a single-row fix broadcasts via AQE anyway, a
         # full-day rebuild's key set may be too big to pin driver-side
         kept = target.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
@@ -173,7 +175,7 @@ def merge_upsert(
                 fs.rename(src, dst)
         fs.delete(jstage, True)
     else:
-        target = spark.read.parquet(path)
+        target = read_parquet(spark, path)
         kept = target.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
         merged = kept.unionByName(updates.select(*kept.columns))
         merged.write.mode("overwrite").parquet(stage)
@@ -182,7 +184,7 @@ def merge_upsert(
         fs.rename(jpath, jold)
         fs.rename(jstage, jpath)
         fs.delete(jold, True)
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)
 
 
 def write_violations(
@@ -347,7 +349,7 @@ def compact_partitions(
         leaf_str = leaf.toString()
         stage = leaf_str.rstrip("/") + "__compact"
         jstage = jvm.org.apache.hadoop.fs.Path(stage)
-        spark.read.parquet(leaf_str).repartition(n_target).write.mode(
+        read_parquet(spark, leaf_str).repartition(n_target).write.mode(
             "overwrite"
         ).parquet(stage)
         for f in files:

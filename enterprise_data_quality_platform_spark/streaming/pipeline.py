@@ -25,7 +25,7 @@ from typing import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import EXPECTED_SCHEMAS, table_path
+from ..catalog import EXPECTED_SCHEMAS, read_parquet, table_path
 from ..checks import Check, run_suite
 from ..checks.definitions import CheckResult
 from ..session import configure_session
@@ -60,14 +60,15 @@ def use_rocksdb_state(
 
 def _events_ts_source_type(spark: SparkSession, sf_dir: str):
     """Probe the parquet footer type of ``events.ts`` via a batch schema
-    read (footer-only — no data scan). The driver's generator has shipped
-    both TIMESTAMP(NANOS) (arrives as long under ``nanosAsLong``) and
-    TIMESTAMP(MICROS) (arrives as timestamp/timestamp_ntz); a stream source
-    that hardcodes one silently mis-decodes the other, so the stream must
-    branch exactly like the batch reader (``catalog._fix_events_ts``)."""
+    read (footer-only — no data scan; memoised by ``read_parquet``). Input
+    generators have shipped both TIMESTAMP(NANOS) (arrives as long under
+    ``nanosAsLong``) and TIMESTAMP(MICROS) (arrives as
+    timestamp/timestamp_ntz); a stream source that hardcodes one silently
+    mis-decodes the other, so the stream must branch exactly like the batch
+    reader (``catalog._fix_events_ts``)."""
     from pyspark.sql import types as T
 
-    dt = spark.read.parquet(table_path(sf_dir, "events")).schema["ts"].dataType
+    dt = read_parquet(spark, table_path(sf_dir, "events")).schema["ts"].dataType
     if not isinstance(dt, (T.LongType, T.TimestampType, T.TimestampNTZType)):
         raise TypeError(f"unsupported events.ts parquet type: {dt}")
     return dt

@@ -101,3 +101,33 @@ def test_alert_idempotent_trigger_and_resolve(spark):
         assert alerts.count() == 3  # trigger, resolve, trigger
         key = incident_key("test-svc", "neg values")
         assert alerts.filter(F.col("incident_key") == key).count() == 3
+
+
+def test_alert_event_ts_is_utc_on_a_non_utc_host(spark, tmp_path, monkeypatch):
+    """The sink stamps naive UTC datetimes; the stored instant must not
+    move with the Python process's time zone (a naive 12:00 once landed as
+    17:00 UTC under America/New_York)."""
+    import time
+    from datetime import datetime, timezone
+
+    results = _failing_results(spark)
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        sink = AlertSink(spark, str(tmp_path / "alerts"), service="tz-svc")
+        assert sink.trigger_for_failures(results, channels=("pagerduty",)) == 1
+        assert sink.resolve("neg values") == 1
+        epochs = [
+            r.epoch
+            for r in spark.read.parquet(str(tmp_path / "alerts"))
+            .selectExpr("cast(event_ts AS long) AS epoch")
+            .collect()
+        ]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    now = datetime.now(timezone.utc).timestamp()
+    assert len(epochs) == 2
+    assert all(abs(e - now) < 60 for e in epochs), (epochs, now)
+    # one file per append
+    assert len(list((tmp_path / "alerts").glob("*.parquet"))) == 2
