@@ -24,16 +24,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
+from ..operators.packedmap import bitmap_distinct
 from .definitions import AGG_CHECK_TYPES, Check, CheckResult
 
-
-class PackedCounterCarry(Exception):
-    """A packed-counter fast path saw a per-key count > 127 (slot carry).
-
-    Raised by the unique check's evaluator when the exactness guard trips;
-    the runner catches it and re-runs the check on its plain per-key
-    groupBy fallback, so the fast path can never return a wrong count —
-    it either matches the plain plan bit-for-bit or loudly defers to it."""
 
 #: Bound on violating-value samples carried into reports — the reference
 #: pulls full violation sets to the client (pager-workflow.py:218-225);
@@ -305,7 +298,7 @@ class CompiledAggCheck:
     ``frame_builder``, when set, supplies the check's 1-row frame directly
     (same output aliases) instead of contributing ``exprs`` to the shared
     scan: distinct-counting checks compile to a groupBy-then-aggregate plan
-    because mixing ``count_distinct`` into a fused aggregate makes Catalyst
+    (for a single integral unique key, on the existence bitmap) because mixing ``count_distinct`` into a fused aggregate makes Catalyst
     Expand-duplicate every input row per distinct group — measured ~30%
     slower than giving the distinct check its own two-level factor (the
     factors still run concurrently inside the one fused job).
@@ -316,13 +309,6 @@ class CompiledAggCheck:
     evaluate: Callable[[Mapping[str, Any], str], CheckResult]
     prefix: str
     frame_builder: Callable[[DataFrame], DataFrame] | None = None
-    #: plain-plan twin of ``frame_builder`` for checks whose primary frame
-    #: is a guarded fast path (packed-counter unique): the runner re-runs
-    #: this builder when the primary frame's job fails at runtime (ANSI
-    #: overflow on an extreme slot pile-up) or its evaluator raises
-    #: ``PackedCounterCarry`` — the same one-row aliases come back, so the
-    #: evaluator is reused as-is.
-    fallback_builder: Callable[[DataFrame], DataFrame] | None = None
 
 
 _ROW_COND_TYPES = frozenset(
@@ -429,10 +415,12 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
         cols = [check.column] if check.check_type == "unique" else list(check.columns)
         # excess rows = count(all-cols-non-null rows) - distinct(tuples over
         # that SAME population): NULL-keyed rows are skipped entirely,
-        # duplicates among non-null keys count. Computed as a two-level
-        # groupBy-on-key factor: after the groupBy there is one row per
-        # distinct tuple, so "distinct" is a plain count and the plan never
-        # Expands the scan the way a fused count_distinct would.
+        # duplicates among non-null keys count. Computed as its own factor
+        # so the plan never Expands the scan the way a fused
+        # count_distinct would: a single integral key counts distinct on
+        # the existence bitmap (build_unique_bitmap); any other key takes
+        # the plain two-level groupBy (build_unique), where one row per
+        # distinct tuple makes "distinct" a plain count.
         nn_cond = F.expr(" AND ".join(f"`{x}` IS NOT NULL" for x in cols))
 
         if p.get("approx", False):
@@ -490,80 +478,27 @@ def compile_agg_check(check: Check, prefix: str) -> CompiledAggCheck:
                 F.coalesce(F.sum("__c"), F.lit(0)).alias(f"{prefix}__total"),
             )
 
-        def build_unique_packed(df: DataFrame) -> DataFrame:
-            # Packed-counter fast path (single integral key; the
-            # dq_key_skew trick, guide §2.3 shuffle fewer rows): group by
-            # ``key >> 3`` and sum ``1 << ((key & 7) * 7)`` — 8 keys per
-            # 64-bit word in 7-bit slots, so the shuffle carries 8× fewer
-            # rows than the per-key groupBy. violations = Σnon-null −
-            # Σnonzero-slots, exactly the plain plan's count − distinct.
-            # EXACTNESS GUARD (same argument as dq_key_skew): valid while
-            # every per-key count ≤ 127; a slot carry moves 128 units out
-            # of a slot and adds 1 to the next, strictly shrinking the
-            # recovered sum, so comparing Σ(slot counts) with the true
-            # non-null COUNT carried through the same aggregate catches
-            # every carry (an extreme top-slot pile-up ANSI-throws: also
-            # loud). Either way the runner re-runs ``fallback_builder``.
+        def build_unique_bitmap(df: DataFrame) -> DataFrame:
+            # Single integral key: count distinct on the existence bitmap
+            # (operators.packedmap.bitmap_distinct, 64 keys per shuffled
+            # word). A bit records presence, not a count, so the answer is
+            # exact for any repeat count; violations = non-null rows −
+            # distinct, exactly the plain plan's.
             if len(cols) != 1 or not isinstance(
                 df.schema[cols[0]].dataType,
                 (LongType, IntegerType, ShortType, ByteType),
             ):
                 return build_unique(df)
-            c = F.col(cols[0]).cast("long")
-            # Column-API form (ADVICE r11 #4): the previous F.expr string
-            # interpolated the raw column name inside backticks, which a
-            # name containing a backtick breaks. Same expression tree:
-            # shiftleft(1L, ((key & 7) * 7) AS INT).
-            # F.shiftleft only takes a literal bit count, so call the SQL
-            # function directly with a Column bit count
-            contrib = F.call_function(
-                "shiftleft",
-                F.lit(1).cast("long"),
-                (c.bitwiseAND(F.lit(7)) * F.lit(7)).cast("int"),
-            )
-            per = df.groupBy(F.shiftright(c, 3).alias("__w")).agg(
-                F.sum(contrib).alias("__p"),
-                F.count(c).alias("__nn"),
-                F.count(F.lit(1)).alias("__all"),
-            )
-            slots = [F.expr(f"(__p >> {s * 7}) & 127") for s in range(8)]
-            distinct_word = sum(
-                (F.when(s > 0, 1).otherwise(0) for s in slots), F.lit(0)
-            )
-            recovered_word = sum(slots[1:], slots[0])
-            return per.agg(
-                F.coalesce(
-                    (F.sum("__nn") - F.sum(distinct_word)).cast("long"),
-                    F.lit(0),
-                ).alias(f"{prefix}__violations"),
-                F.coalesce(F.sum("__all"), F.lit(0)).alias(f"{prefix}__total"),
-                F.coalesce(F.sum(recovered_word), F.lit(0)).alias(
-                    f"{prefix}__pk_recovered"
+            return bitmap_distinct(df, F.col(cols[0])).select(
+                (F.col("non_null") - F.col("distinct")).alias(
+                    f"{prefix}__violations"
                 ),
-                F.coalesce(F.sum("__nn"), F.lit(0)).alias(f"{prefix}__pk_nn"),
+                F.col("rows").alias(f"{prefix}__total"),
             )
-
-        count_eval = _count_eval(check)
-
-        def ev_unique(row: Mapping[str, Any], pfx: str) -> CheckResult:
-            if f"{pfx}__pk_recovered" in row:  # packed frame: check guard
-                if int(row[f"{pfx}__pk_recovered"] or 0) != int(
-                    row[f"{pfx}__pk_nn"] or 0
-                ):
-                    raise PackedCounterCarry(
-                        f"{check.check_type} on {check.table}.{cols[0]}: a"
-                        " per-key count exceeded 127; re-running the plain"
-                        " per-key groupBy"
-                    )
-            return count_eval(row, pfx)
 
         return CompiledAggCheck(
-            check,
-            {},
-            ev_unique,
-            prefix,
-            frame_builder=build_unique_packed,
-            fallback_builder=build_unique,
+            check, {}, _count_eval(check), prefix,
+            frame_builder=build_unique_bitmap,
         )
 
     if check.check_type == "distinct_in_set":

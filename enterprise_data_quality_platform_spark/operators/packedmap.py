@@ -7,8 +7,10 @@ bits), the build side need not be a (key, value) hash table at all: pack
 ``2**k`` keys per 64-bit word, keyed by ``key >> k``, with the value's
 code stored in the key's slot. Code 0 is reserved for "no such key", so
 the probe-side slot test reproduces exact inner-join semantics (absent
-key == failed join) the same way the existence bitmap does in
-``mart_promo_revenue_share``.
+key == failed join) the same way the 1-bit existence bitmap
+(``bitmap_word`` / ``bitmap_bit`` / ``bitmap_has``) does in
+``mart_promo_revenue_share``. The same bitmap counts distinct integral
+keys exactly (``bitmap_distinct``).
 
 Why it matters at scale: a 15M-row orders dim consumed only for
 ``year(o_orderdate)`` collapses from a ~1 GB hash relation to a ~15 MB
@@ -40,6 +42,56 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+
+def bitmap_word(key: Column) -> Column:
+    """Existence-bitmap word of a long ``key``: 64 keys per word."""
+    return F.shiftright(key, 6)
+
+
+def bitmap_bit(key: Column) -> Column:
+    """``1L << (key & 63)``: ``key``'s bit in its word. ``key & 63`` is a
+    two's-complement identity, so (word, bit) is a bijection on longs,
+    negatives included."""
+    # F.shiftleft only takes a literal bit count; the SQL function takes
+    # a column
+    return F.call_function(
+        "shiftleft", F.lit(1).cast("long"), key.bitwiseAND(F.lit(63)).cast("int")
+    )
+
+
+def bitmap_has(bits: str, key: str) -> Column:
+    """Probe-side test: is ``key``'s bit set in the word column ``bits``?
+    Written with SQL ``>>`` so plans read as they always have."""
+    b, k = (f"`{c.replace('`', '``')}`" for c in (bits, key))
+    return F.expr(f"({b} >> CAST({k} & 63 AS INT)) & 1 = 1")
+
+
+def bitmap_distinct(df: DataFrame, key: Column) -> DataFrame:
+    """One row of ``rows``, ``non_null`` and ``distinct`` (exact
+    COUNT(DISTINCT key)) for an integral ``key``, all longs and 0 on an
+    empty frame.
+
+    Groups by ``bitmap_word`` and ORs ``bitmap_bit``, so the shuffle
+    carries one row per 64-key word and ``distinct`` is Σ bit_count. A
+    bit records presence, not a count, so no repeat count can overflow
+    it: there is no precondition and no fallback. NULL keys fall into
+    the NULL word, whose bit_or is NULL."""
+    k = key.cast("long")
+    words = df.groupBy(bitmap_word(k).alias("__w")).agg(
+        F.bit_or(bitmap_bit(k)).alias("__b"),
+        F.count(F.lit(1)).alias("__rows"),
+        F.count(k).alias("__nn"),
+    )
+
+    def total(c: Column) -> Column:
+        return F.coalesce(F.sum(c).cast("long"), F.lit(0))
+
+    return words.agg(
+        total(F.col("__rows")).alias("rows"),
+        total(F.col("__nn")).alias("non_null"),
+        total(F.bit_count("__b")).alias("distinct"),
+    )
 
 
 @dataclass(frozen=True)
@@ -189,11 +241,12 @@ def _footer_col_minmax(
 ) -> tuple | None:
     """Exact (min, max) of an integral column from parquet column-chunk
     statistics only — metadata, no scan. Returns ``None`` when the stats
-    cannot prove the bound: any value-bearing chunk without exact min/max,
-    a non-parquet path, or more than ``max_files`` files (the cap keeps
-    this a bounded driver-side read at 100 TB — callers fall back to an
-    in-plan guard). Returns ``(None, None)`` for an empty / all-null
-    column (vacuously in any range: no values exist to violate it)."""
+    cannot prove the bound: any value-bearing chunk without exact min/max
+    or with non-integer min/max (a string or double column), a non-parquet
+    path, or more than ``max_files`` files (the cap keeps this a bounded
+    driver-side read at 100 TB — callers fall back to an in-plan guard).
+    Returns ``(None, None)`` for an empty / all-null column (vacuously in
+    any range: no values exist to violate it)."""
     import os
 
     import pyarrow.parquet as pq
@@ -230,7 +283,11 @@ def _footer_col_minmax(
                     if st is None and ch.num_values:
                         return None
                     continue
-                if not st.has_min_max:
+                # an integral bound only: string or double statistics
+                # cannot prove a key range
+                if not st.has_min_max or not (
+                    type(st.min) is int and type(st.max) is int
+                ):
                     return None
                 mn = st.min if mn is None else min(mn, st.min)
                 mx = st.max if mx is None else max(mx, st.max)

@@ -25,7 +25,7 @@ Glue DAG's three parallel master-data jobs overlap.
 from __future__ import annotations
 
 import time
-from concurrent.futures import ThreadPoolExecutor, Future
+from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
@@ -93,41 +93,35 @@ class Pipeline:
 
         with ThreadPoolExecutor(max_workers=self.max_parallel) as pool:
             while pending or running:
-                progressed = False
+                n_pending = len(pending)
                 for name in list(pending):
                     stage = pending[name]
                     ups = [status.get(u) for u in stage.upstream]
                     if any(u in ("failed", "skipped") for u in ups):
                         status[name] = "skipped"
                         del pending[name]
-                        progressed = True
                     elif all(u == "success" for u in ups):
                         running[name] = pool.submit(attempt, stage)
                         del pending[name]
-                        progressed = True
-                if not running:
-                    if pending and not progressed:
-                        # nothing runnable, nothing in flight, nothing newly
-                        # resolved: the remaining stages wait on each other —
-                        # a dependency cycle. Raise instead of busy-spinning.
-                        raise ValueError(
-                            "dependency cycle among stages: "
-                            + ", ".join(sorted(pending))
-                        )
-                    continue
-                done = [n for n, f in running.items() if f.done()]
-                if not done:
-                    time.sleep(0.01)
-                    continue
-                for name in done:
-                    fut = running.pop(name)
-                    exc = fut.exception()
-                    if exc is None:
-                        ctx[name] = fut.result()
-                        status[name] = "success"
-                    else:
-                        status[name] = "failed"
-                        errors[name] = exc  # type: ignore[assignment]
+                if running:
+                    done, _ = wait(running.values(), return_when=FIRST_COMPLETED)
+                    for name in [n for n, f in running.items() if f in done]:
+                        fut = running.pop(name)
+                        exc = fut.exception()
+                        if exc is None:
+                            ctx[name] = fut.result()
+                            status[name] = "success"
+                        else:
+                            status[name] = "failed"
+                            errors[name] = exc  # type: ignore[assignment]
+                elif len(pending) == n_pending:
+                    # nothing runnable, nothing in flight, nothing newly
+                    # resolved: the remaining stages wait on each other —
+                    # a dependency cycle. Raise instead of spinning.
+                    raise ValueError(
+                        "dependency cycle among stages: "
+                        + ", ".join(sorted(pending))
+                    )
 
         ctx["__status__"] = status
         if errors and raise_on_failure:

@@ -9,6 +9,9 @@ from pyspark.sql import functions as F
 from ..catalog import local_frame, table
 from ..models import marts, staging
 from ..operators.packedmap import (
+    bitmap_bit,
+    bitmap_has,
+    bitmap_word,
     join_packed_codes,
     packed_code_map,
     packed_map_worthwhile,
@@ -1768,8 +1771,8 @@ def mart_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     1.94 s (−26%, alternating medians of 5; PERF.md r8)."""
     li = table(spark, sf_dir, "lineitem")
     part = table(spark, sf_dir, "part")
-    pbit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p_partkey & 63 AS INT))")
-    bitmaps = part.groupBy(F.shiftright(F.col("p_partkey"), 6).alias("w")).agg(
+    pbit = bitmap_bit(F.col("p_partkey"))
+    bitmaps = part.groupBy(bitmap_word(F.col("p_partkey")).alias("w")).agg(
         F.bit_or(pbit).alias("exists_bits"),
         F.bit_or(
             F.when(F.col("p_type") == "PROMO", pbit).otherwise(F.lit(0))
@@ -1802,9 +1805,9 @@ def mart_promo_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5)
     ).cast("long")
     joined = li.join(
-        bitmaps.drop("cnt"), F.shiftright(F.col("l_partkey"), 6) == F.col("w")
-    ).filter(F.expr("(exists_bits >> CAST(l_partkey & 63 AS INT)) & 1 = 1"))
-    promo = F.expr("((promo_bits >> CAST(l_partkey & 63 AS INT)) & 1) = 1")
+        bitmaps.drop("cnt"), bitmap_word(F.col("l_partkey")) == F.col("w")
+    ).filter(bitmap_has("exists_bits", "l_partkey"))
+    promo = bitmap_has("promo_bits", "l_partkey")
     return (
         joined.groupBy(F.date_trunc("month", F.col("l_shipdate")).alias("ship_month"))
         .agg(
@@ -2451,7 +2454,7 @@ def mart_brand_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = table(spark, sf_dir, "orders")
     part = table(spark, sf_dir, "part")
 
-    pbit = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(p_partkey & 63 AS INT))")
+    pbit = bitmap_bit(F.col("p_partkey"))
     is_std = F.col("p_type") == "STANDARD"
     # The duplicate-p_partkey guard is PER-WORD and inline in pmaps (the
     # packed_code_map shape), not a detached result-side crossJoin: a
@@ -2460,7 +2463,7 @@ def mart_brand_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eliminated when every probe row drops — silently-empty output
     # instead of the loud raise (ADVICE r8).
     pmaps = (
-        part.groupBy(F.shiftright(F.col("p_partkey"), 6).alias("pw"))
+        part.groupBy(bitmap_word(F.col("p_partkey")).alias("pw"))
         .agg(
             F.bit_or(pbit).alias("exists_bits"),
             F.bit_or(
@@ -2509,14 +2512,14 @@ def mart_brand_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.select("l_orderkey", "l_partkey", "l_extendedprice", "l_discount")
         .join(
             pmaps.select("pw", "std_bits", "brand_bits"),
-            F.shiftright(F.col("l_partkey"), 6) == F.col("pw"),
+            bitmap_word(F.col("l_partkey")) == F.col("pw"),
         )
-        .filter(F.expr("(std_bits >> CAST(l_partkey & 63 AS INT)) & 1 = 1")),
+        .filter(bitmap_has("std_bits", "l_partkey")),
         ymap,
         "l_orderkey",
         "_ycode",
     )
-    is_brand = F.expr("((brand_bits >> CAST(l_partkey & 63 AS INT)) & 1) = 1")
+    is_brand = bitmap_has("brand_bits", "l_partkey")
     return (
         probed.groupBy((F.col("_ycode") + 1989).alias("order_year"))
         .agg(
@@ -2561,7 +2564,9 @@ def mart_large_volume_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     its facts (the aggregate is a filter, not the answer).
 
     Plan (r8 rewrite — PACKED 14-BIT QUANTITY SUMS, the dq_key_skew
-    packed-counter mechanism extended from counts to small integer SUMS):
+    packed-counter mechanism extended from counts to small integer SUMS;
+    a sum needs the slot's value, so unlike the distinct counts on the
+    existence bitmap it keeps a carry guard):
     the per-order aggregate was the whole cost (15M mostly-distinct
     orderkeys at sf10 — the pass-through-partial signature), so instead
     of one group per order, group by ``l_orderkey >> 2`` and sum
@@ -2743,8 +2748,8 @@ def mart_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(part_gid), F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "gid",
-            F.shiftright(F.col("l_suppkey"), 6).alias("chunk"),
-            F.expr("shiftleft(1L, CAST(l_suppkey & 63 AS INT))").alias("bit"),
+            bitmap_word(F.col("l_suppkey")).alias("chunk"),
+            bitmap_bit(F.col("l_suppkey")).alias("bit"),
         )
     )
     counts = (

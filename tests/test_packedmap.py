@@ -191,3 +191,23 @@ def test_degrades_to_shuffle_join_with_identical_values(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_static)
         spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", old_adaptive)
     assert degraded == baseline
+
+
+def test_footer_col_minmax_none_for_non_integral_stats(tmp_path):
+    """String and double chunk statistics cannot prove an integral key
+    range: ``_footer_col_minmax`` returns None (the in-plan guard path)
+    instead of handing a caller values it would compare with ints."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from enterprise_data_quality_platform_spark.operators.packedmap import (
+        _footer_col_minmax,
+    )
+
+    pq.write_table(
+        pa.table({"k": [3, -2, 9], "s": ["b", "a", "c"], "d": [1.5, -2.0, 0.0]}),
+        tmp_path / "t.parquet",
+    )
+    assert _footer_col_minmax(str(tmp_path), "t", "k") == (-2, 9)
+    assert _footer_col_minmax(str(tmp_path), "t", "s") is None
+    assert _footer_col_minmax(str(tmp_path), "t", "d") is None
